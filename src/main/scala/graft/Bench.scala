@@ -10,25 +10,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", H.scratchDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.start()
 
-    // Warm-up: scheduler, parquet footers, codegen + shuffle machinery.
-    // Best-effort per table: a missing table is the queries' problem to
-    // report, not a reason to abort the whole benchmark.
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Seq("lineitem", "orders", "customer", "documents", "embeddings")
-      .foreach(t => scala.util.Try(H.tbl(spark, sfDir, t).count()))
-    scala.util.Try(H.events(spark, sfDir).count())
+    Session.warmUp(spark, sfDir)
     // catalog + commit-protocol first-use cost (r02 charged ~27 s of it to
     // whichever catalog query ran first). Self-heal residue from a killed
     // run FIRST: a fresh session's catalog doesn't know the old managed

@@ -1,28 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Plan inspector for shared pipeline cores (the judged queries wrap their
-  * result in H.materialized/localCheckpoint, which leaves only an opaque
-  * RDD scan to explain — this prints the INTERIOR plan the optimization
-  * notes reference). `runMain graft.ExplainCore <core> [sfDir]`.
+/** Plan inspector: `runMain graft.ExplainCore <core|query> [sfDir]` prints
+  * the formatted physical plan on the board's session settings — the check
+  * that filters are pushed (PushedFilters), scans are pruned (ReadSchema),
+  * dims are broadcast, and codegen spans are wide. A registered query name
+  * explains that query; the named cores below print the INTERIOR plan of
+  * shared pipelines (the judged queries wrap their result in
+  * H.materialized/localCheckpoint, which leaves only an opaque RDD scan).
   */
 object ExplainCore {
   def main(args: Array[String]): Unit = {
     val core = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", H.scratchDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.start()
     import graft.functions.{DedupSketches => DS}
     val docs = H.tbl(spark, sfDir, "documents")
     val df = core match {

@@ -264,9 +264,9 @@ object H {
 
   /** The events table's `ts` column has shipped in two different physical
     * encodings across driver provisions: TIMESTAMP(NANOS) (readable only via
-    * spark.sql.legacy.parquet.nanosAsLong, set in Verify/Bench and test
-    * sessions, surfacing as LongType) and TIMESTAMP_NTZ micros (canonicalized
-    * by `tbl`). Normalize every shape a future provision could plausibly
+    * spark.sql.legacy.parquet.nanosAsLong, set on every session by
+    * `graft.Session`, surfacing as LongType) and TIMESTAMP_NTZ micros
+    * (canonicalized by `tbl`). Normalize every shape a future provision could plausibly
     * ship to TimestampType here:
     *   - LongType: an epoch integer whose unit is undeclared (bare INT64,
     *     or nanos surfaced by the legacy flag). Dispatch on magnitude

@@ -36,17 +36,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", H.scratchDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
     args.toList match {
       case "gen" :: srcSf :: outDir :: k :: Nil => gen(spark, srcSf, outDir, k.toInt)
       case "run" :: dir1 :: dir2 :: queries :: Nil =>
@@ -177,11 +167,8 @@ object ScaleProbe {
       System.err.println(s"[probe] calib x=$x")
       (System.nanoTime() - t0) / 1e6
     }
-    def once(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def once(name: String, dir: String): Double =
+      Session.run(SparkEntry.queries(name)(spark, dir))(_.count()).sec
     val rows = queries.map { q =>
       val a = once(q, dir1) // warm-up + base measurement, best of 2
       val a2 = once(q, dir1)

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -50,19 +50,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
-    // default to the machine's cores (bounded 32): the driver's budget is
-    // wall-clock, and an un-set env var must not quarter the dump's cores
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", H.scratchDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
 
     // Longest-first scheduling (classic LPT): order by the clean bench
     // reference when present so the streaming heavies launch immediately
@@ -83,33 +71,27 @@ object Verify {
     val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
     val t00 = System.nanoTime()
+    // one query's dump: build on its own child session, write, free
+    def dump(name: String, fn: (SparkSession, String) => DataFrame): Double =
+      Session.run(fn(spark.newSession(), sfDir)) { df =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); 0L
+      }.sec
     work.foreach { case (name, fn) =>
       pool.execute { () =>
-        val t0 = System.nanoTime()
-        var df: org.apache.spark.sql.DataFrame = null
         try {
-          val ss = spark.newSession()
-          df = fn(ss, sfDir)
-          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          // release the result's own localCheckpoint blocks (H.materialized
-          // frees a query's INPUTS; the checkpointed result itself would
-          // otherwise sit in executor storage until GC notices — across ~700
-          // queries that is a steadily rising heap floor, r9 verdict item 5)
-          H.freeLocalCheckpoint(df)
-          val sec = (System.nanoTime() - t0) / 1e9
+          val sec = dump(name, fn)
           System.err.println(f"[verify] $name%-32s ${sec}%7.2f s  (${done.incrementAndGet()}/${work.size}, wall ${(System.nanoTime() - t00) / 1e9}%.0f s)")
         } catch { case e: Throwable =>
-          // free on the FAILURE path too: a query that dies after its
-          // localCheckpoint materialized would otherwise leak those blocks
-          // across the rest of the run (r10 advice item 3)
-          if (df != null) scala.util.Try(H.freeLocalCheckpoint(df))
           failed.add(name); done.incrementAndGet()
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
     }
     pool.shutdown()
-    pool.awaitTermination(24, java.util.concurrent.TimeUnit.HOURS)
+    if (!pool.awaitTermination(24, java.util.concurrent.TimeUnit.HOURS)) {
+      pool.shutdownNow()
+      sys.error(s"query pool timed out: ${done.get}/${work.size} queries finished")
+    }
     // Sequential retry of pool-phase failures: concurrent queries share
     // the session-wide CacheManager, so two queries caching IDENTICAL
     // subplans share one InMemoryRelation — the first query's unpersist
@@ -117,18 +99,12 @@ object Verify {
     // localCheckpoint that was freed with it ("Block rdd_N does not
     // exist", observed once in ~6 full boards on the dedup family).
     // Alone on the session, the retry cannot hit the race.
-    val byName = SparkEntry.queries
     failed.toArray.map(_.toString).sorted.foreach { name =>
-      val t0 = System.nanoTime()
-      var df: org.apache.spark.sql.DataFrame = null
       try {
-        df = byName(name)(spark.newSession(), sfDir)
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        H.freeLocalCheckpoint(df)
+        val sec = dump(name, SparkEntry.queries(name))
         failed.remove(name)
-        System.err.println(f"[verify] $name%-32s ${(System.nanoTime() - t0) / 1e9}%7.2f s  (sequential retry ok)")
+        System.err.println(f"[verify] $name%-32s ${sec}%7.2f s  (sequential retry ok)")
       } catch { case e: Throwable =>
-        if (df != null) scala.util.Try(H.freeLocalCheckpoint(df))
         System.err.println(s"[verify] $name failed on retry: ${e.getMessage}")
       }
     }

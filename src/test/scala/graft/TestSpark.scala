@@ -2,21 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM. */
+/** One shared local session for the whole test JVM: the tools' session
+  * settings at a fixed local[4], plus a throwaway warehouse. */
 object TestSpark {
+  val cores = 4
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Session.builder(cores)
       .appName("graft-tests")
       .config("spark.sql.warehouse.dir",
         // swept at JVM exit — bucketed-table specs write real data here,
         // and java.io.tmpdir is RAM-backed tmpfs (see H.cleanupOnExit)
         H.cleanupOnExit(
           java.nio.file.Files.createTempDirectory("graft_wh").toString))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -61,7 +58,10 @@ object QueryRuns {
       pool.execute(() => { out.put(name, runOnce(name)); () })
     }
     pool.shutdown()
-    pool.awaitTermination(2, java.util.concurrent.TimeUnit.HOURS)
+    if (!pool.awaitTermination(2, java.util.concurrent.TimeUnit.HOURS)) {
+      pool.shutdownNow()
+      sys.error(s"query pool timed out: ${out.size}/${SparkEntry.queries.size} queries finished")
+    }
     import scala.jdk.CollectionConverters._
     out.asScala.toMap.map {
       case (name, r) if r.isFailure => name -> runOnce(name) // lone retry
